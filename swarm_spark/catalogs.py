@@ -4,7 +4,8 @@
 containers without table-format jars. This module provides the
 PRODUCTION binding: the same small protocol the pipeline depends on
 (`table(name)` → `.append(df, partition_unit, ts_col) -> snapshot
-dict`, `.read(spark)`, `.exists()`, `.schema()`) implemented over the
+dict`, `.append_rows(rows, schema, partition_unit, ts_col)`,
+`.read(spark)`, `.exists()`, `.schema()`) implemented over the
 Spark SQL catalog API, so a cluster with Iceberg configured
 
     spark.sql.catalog.lake = org.apache.iceberg.spark.SparkCatalog
@@ -223,6 +224,13 @@ class SparkCatalogTable:
             "added_rows": int(obs.get["n"]),
             "op": "append",
         }
+
+    def append_rows(self, rows: list[tuple], schema: T.StructType,
+                    partition_unit: str = "", ts_col: str = "timestamp") -> dict:
+        """Driver-side rows (an audit record): the catalog owns its
+        file layout, so they go through the DataFrame append."""
+        return self.append(self.spark.createDataFrame(rows, schema),
+                           partition_unit=partition_unit, ts_col=ts_col)
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         if snapshot_id is not None:

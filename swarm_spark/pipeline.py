@@ -10,7 +10,8 @@ driver-side fan-out loop for the per-sink writes:
     routed ──persist──┬── ONE partitionBy(_sink,_p) write job →
                       │     per-sink snapshot ADOPTION (metadata commits)
                       ├── groupBy(sink, role, tool, hour).count → agg table
-                      └── audit LoadLog row
+                      └── audit LoadLog row (built on the driver,
+                            committed as one arrow-written file: no job)
 
 Scale notes (10^12 turns):
   * The parse/route/enrich segment is shuffle-free: narrow column
@@ -35,9 +36,11 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions.extract import extract_columns
 from .functions.normalize import content_hash_id
@@ -50,6 +53,26 @@ PAYLOAD_FIELDS = [
     "called_tool", "call_args", "error_code", "actor",
     "tool_family", "is_privileged",
 ]
+
+# the audit (LoadLog) row; field for field the schema the former
+# createDataFrame + current_timestamp() audit write recorded, so rows
+# from both paths merge into one table
+AUDIT_SCHEMA = T.StructType([
+    T.StructField("request_id", T.StringType()),
+    T.StructField("batch_id", T.StringType()),
+    T.StructField("success", T.BooleanType()),
+    T.StructField("error", T.StringType()),
+    T.StructField("input_rows", T.LongType()),
+    T.StructField("routed_rows", T.LongType()),
+    T.StructField("elapsed_sec", T.DoubleType()),
+    T.StructField("ingests", T.ArrayType(T.StructType([
+        T.StructField("sink", T.StringType()),
+        T.StructField("log_count", T.LongType()),
+        T.StructField("snapshot_id", T.LongType()),
+        T.StructField("success", T.BooleanType()),
+    ]))),
+    T.StructField("started_at", T.TimestampType(), False),
+])
 
 
 @dataclass
@@ -270,7 +293,7 @@ class IngestPipeline:
     # ------------------------------------------------------------------
     def _single_pass_write(self, routed: DataFrame, request_id: str,
                            sinks: list[str], rule_by_sink: dict,
-                           dl_name: str, commit_adopt, obs_in):
+                           dl_name: str, commit, obs_in):
         """ONE Spark write job for every sink (the multi-sink fan-out
         that used to be N filtered writes):
 
@@ -420,7 +443,6 @@ class IngestPipeline:
                     [r for _, bad in failures for r in bad])
 
         field_by_name = {f.name: f for f in routed.schema.fields}
-        from pyspark.sql import types as T
 
         def sink_schema(keep: list[str]) -> T.StructType:
             env = [
@@ -441,15 +463,15 @@ class IngestPipeline:
             keep = [c for c in payload_cols
                     if r is None or c not in set(r.drop_fields)]
             ddir = os.path.join(batch_dir, f"_sink={s}")
-            snap = commit_adopt(
-                s, ddir if os.path.isdir(ddir) else None, counts[s],
+            snap = commit(s, lambda t: t.adopt_dir(
+                ddir if os.path.isdir(ddir) else None, counts[s],
                 sink_schema(keep),
-                r.partition_unit if r is not None else "",
-            )
+                r.partition_unit if r is not None else "", "timestamp"))
             per_sink_rows[s] = snap["added_rows"]
             snapshot_ids[s] = snap["snapshot_id"]
-        # every _sink= subdir has been moved into (or skipped by) its
-        # table; only writer marker files remain — don't leave one
+        # every _sink= subdir has been moved into its table, or was
+        # left behind by a sink a failed attempt had already committed;
+        # only those and writer marker files remain — don't leave one
         # orphan dir per batch behind (10^4-batch backfills would
         # litter the warehouse)
         import shutil
@@ -489,7 +511,10 @@ class IngestPipeline:
 
         book_lock = threading.Lock()  # bookkeeping only; writes stay parallel
 
-        def commit_append(table_name: str, df: DataFrame, **kw) -> dict:
+        def commit(table_name: str, write) -> dict:
+            """Run write(table) -> snapshot (an append, an adoption or
+            a row append) unless the failed attempt already committed
+            this table, and record the snapshot for rollback/resume."""
             t = self.catalog.table(table_name)
             with book_lock:
                 if table_name in prior:
@@ -497,7 +522,7 @@ class IngestPipeline:
                         if s["snapshot_id"] == prior[table_name]:
                             return s  # already durably committed by the failed attempt
                     del prior[table_name]  # rolled back / expired: re-append
-            snap = t.append(df, **kw)
+            snap = write(t)
             with book_lock:
                 committed[table_name] = snap["snapshot_id"]
                 attempt.append((table_name, snap["snapshot_id"]))
@@ -505,7 +530,6 @@ class IngestPipeline:
             return snap
 
         t0 = time.time()
-        started_at = F.current_timestamp()
         try:
             # Input row count rides the plan as an Observation — it is
             # collected during cache materialization, never via a
@@ -536,34 +560,11 @@ class IngestPipeline:
                        if cfg.dead_letter_table and cfg.on_unmatched == "keep"
                        else "")
 
-            def commit_adopt(table_name: str, ddir: str | None, n: int,
-                             schema, partition_unit: str = "") -> dict:
-                import shutil
-
-                t = self.catalog.table(table_name)
-                with book_lock:
-                    if table_name in prior:
-                        for s_ in t.snapshots():
-                            if s_["snapshot_id"] == prior[table_name]:
-                                # already committed by the failed
-                                # attempt — drop this attempt's staged
-                                # copy and keep the durable snapshot
-                                if ddir and os.path.isdir(ddir):
-                                    shutil.rmtree(ddir, ignore_errors=True)
-                                return s_
-                        del prior[table_name]
-                snap = t.adopt_dir(ddir, n, schema, partition_unit, "timestamp")
-                with book_lock:
-                    committed[table_name] = snap["snapshot_id"]
-                    attempt.append((table_name, snap["snapshot_id"]))
-                    self.manifest.update(batch_id, STATE_RUNNING, committed)
-                return snap
-
             if cfg.write_mode == "single_pass":
                 per_sink_rows, snapshot_ids, routed_rows_total, input_rows = \
                     self._single_pass_write(
                         routed, request_id, sinks, rule_by_sink, dl_name,
-                        commit_adopt, obs_in,
+                        commit, obs_in,
                     )
             elif cfg.write_mode == "per_sink":
                 # Materialize the cache ONCE before the per-sink
@@ -588,7 +589,7 @@ class IngestPipeline:
                         *[c for c in PAYLOAD_FIELDS if c in routed.columns],
                     )
                     if not dl.isEmpty():
-                        snap = commit_append(dl_name, dl, ts_col="timestamp")
+                        snap = commit(dl_name, lambda t: t.append(dl, ts_col="timestamp"))
                         per_sink_rows[dl_name] = snap["added_rows"]
                         snapshot_ids[dl_name] = snap["snapshot_id"]
 
@@ -599,9 +600,8 @@ class IngestPipeline:
                     out = routed.filter(F.col("sink_table") == sink).select(
                         "id", "ingest_id", "timestamp", "ingested_at", *keep
                     )
-                    snap = commit_append(
-                        sink, out, partition_unit=r.partition_unit, ts_col="timestamp"
-                    )
+                    snap = commit(sink, lambda t: t.append(
+                        out, partition_unit=r.partition_unit, ts_col="timestamp"))
                     return sink, snap
 
                 # per-dest worker pool ≙ load.go:96-121; each write
@@ -615,10 +615,8 @@ class IngestPipeline:
 
             if with_agg:
                 agg = self.aggregate(routed).withColumn("batch_id", F.lit(batch_id))
-                agg_snap = commit_append(
-                    cfg.agg_table, agg.withColumn("timestamp", F.col("hour")),
-                    ts_col="timestamp",
-                )
+                agg_snap = commit(cfg.agg_table, lambda t: t.append(
+                    agg.withColumn("timestamp", F.col("hour")), ts_col="timestamp"))
                 snapshot_ids[cfg.agg_table] = agg_snap["snapshot_id"]
 
             routed_rows = sum(
@@ -635,19 +633,17 @@ class IngestPipeline:
             elapsed = time.time() - t0
 
             if with_audit:
-                audit = self.spark.createDataFrame(
-                    [(
-                        request_id, batch_id, True, None,
-                        input_rows, routed_rows, float(elapsed),
-                        [(s, per_sink_rows[s], int(snapshot_ids[s]), True) for s in sinks],
-                    )],
-                    "request_id string, batch_id string, success boolean, error string, "
-                    "input_rows bigint, routed_rows bigint, elapsed_sec double, "
-                    "ingests array<struct<sink:string,log_count:bigint,snapshot_id:bigint,success:boolean>>",
-                ).withColumn("started_at", started_at)
-                # audit table month-partitioned on started_at (bigquery.go:77-83)
-                commit_append(cfg.audit_table, audit,
-                              partition_unit="month", ts_col="started_at")
+                # one LoadLog row built on the driver, committed with no
+                # Spark job; month-partitioned on started_at
+                # (bigquery.go:77-83)
+                row = (
+                    request_id, batch_id, True, None,
+                    input_rows, routed_rows, float(elapsed),
+                    [(s, per_sink_rows[s], int(snapshot_ids[s]), True) for s in sinks],
+                    datetime.now(timezone.utc),
+                )
+                commit(cfg.audit_table, lambda t: t.append_rows(
+                    [row], AUDIT_SCHEMA, partition_unit="month", ts_col="started_at"))
 
             if cfg.persist_routed != "none":
                 routed.unpersist()

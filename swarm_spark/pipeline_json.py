@@ -8,8 +8,11 @@ batch and union-merged monotonically with the live table schema
 
 Pipeline:  files → read_multidoc_json → event-route on object path →
            explode_records → nil-strip (Arrow UDF) → id/ts envelope →
-           per-sink: infer schema → from_json(payload) → icepack
-           append (union-by-name evolution, conflict = hard error)
+           persist + ONE per-sink count job → per non-empty sink:
+           infer schema → from_json(payload) → icepack append
+           (union-by-name evolution, conflict = hard error) →
+           audit row built on the driver and committed by adopting one
+           arrow-written file (no Spark job)
 
 The schema-inference pass is one extra scan of each sink's records —
 exactly the cost swarm pays in bqs.Infer over every record; here it
@@ -23,16 +26,39 @@ import json
 import time
 import uuid
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .functions.normalize import content_hash_json_udf, nil_strip_json_udf
 from .manifest import STATE_COMPLETED, STATE_FAILED, STATE_RUNNING, ManifestStore
 from .rules import EventRule, route
 from .tablestore import IcepackCatalog
+
+
+# the per-request audit row (≙ swarm's LoadLog insert); field for field
+# the schema the former createDataFrame + current_timestamp() write
+# recorded, so rows from both paths merge into one table
+JSON_AUDIT_SCHEMA = T.StructType([
+    T.StructField("request_id", T.StringType()),
+    T.StructField("batch_id", T.StringType()),
+    T.StructField("success", T.BooleanType()),
+    T.StructField("error", T.StringType()),
+    T.StructField("table_schemas", T.StringType()),
+    T.StructField("log_counts", T.StringType()),
+    T.StructField("started_at", T.TimestampType(), False),
+])
+
+
+def sink_counts(recs: DataFrame) -> dict[str, int]:
+    """Rows per sink in ONE job (absent sink = no rows). On a
+    persisted `recs` the same job also materializes the cache."""
+    return {r["sink_table"]: int(r["count"])
+            for r in recs.groupBy("sink_table").count().collect()}
 
 
 @dataclass(frozen=True)
@@ -83,8 +109,6 @@ def make_drop_udf(paths: tuple):
     {"op":"remove","path":"/a/b/c"}) from a JSON object column.
     Arrow-batched. Note: prefix is stripped positionally (p[2:]), not
     with lstrip — a leading '$' or '.' in a KEY must survive."""
-    from pyspark.sql import types as T
-
     for p in paths:
         if not p.startswith("$."):
             raise ValueError(f"drop path must start with '$.': {p!r}")
@@ -124,8 +148,6 @@ def _merge_inferred(old, new):
     must converge, not hard-fail. Genuine conflicts (string vs long,
     scalar vs struct) still raise SchemaConflictError — the bqs.Merge
     contract (/root/reference/pkg/usecase/bigquery.go:15-62)."""
-    from pyspark.sql import types as T
-
     if old is None:
         return new
     by_name = {f.name: f for f in new.fields}
@@ -141,8 +163,6 @@ def _merge_inferred(old, new):
 
 
 def _merge_inferred_type(a, b, name):
-    from pyspark.sql import types as T
-
     from .tablestore import SchemaConflictError
 
     if a == b:
@@ -181,8 +201,6 @@ def _string_probe_schema(schema):
     pinpoints a conflict with ONE extra parse per record instead of a
     get_json_object re-parse per leaf (measured 2.4 s → ~1 s per 1M
     docs per coverage scan)."""
-    from pyspark.sql import types as T
-
     def probe_type(dt):
         if isinstance(dt, T.StructType):
             return T.StructType(
@@ -203,8 +221,6 @@ PROBE_LEAF_THRESHOLD = 32
 
 
 def _count_leaves(schema) -> int:
-    from pyspark.sql import types as T
-
     n = 0
     for f in schema.fields:
         if isinstance(f.dataType, T.StructType):
@@ -251,8 +267,6 @@ def _residual_predicate(
     re-parses the document (measured 3x parse cost at 1M records;
     NOTES_r4).
     """
-    from pyspark.sql import types as T
-
     parsed = parsed_col if parsed_col is not None else F.from_json(F.col(col), schema)
     use_probe = (not nulls_stripped) and _count_leaves(schema) > PROBE_LEAF_THRESHOLD
     probe = F.from_json(F.col(col), _string_probe_schema(schema)) if use_probe else None
@@ -457,10 +471,11 @@ class JsonIngest:
         recs = self.records(path).persist()
         out: dict[str, str] = {}
         try:
+            counts = sink_counts(recs)
             for r in self.rules:
-                docs_only = recs.filter(F.col("sink_table") == r.sink_table).select("data")
-                if docs_only.isEmpty():
+                if not counts.get(r.sink_table):
                     continue
+                docs_only = recs.filter(F.col("sink_table") == r.sink_table).select("data")
                 inferred = self._infer_for_sink(r, docs_only)
                 envelope = recs.filter(F.col("sink_table") == r.sink_table).select(
                     "id",
@@ -483,8 +498,6 @@ class JsonIngest:
         """Bounded-sample inference union-merged with the sink table's
         LIVE data schema, so fields seen in earlier batches are never
         silently lost even when this batch's sample misses them."""
-        from pyspark.sql import types as T
-
         live = None
         t = self.catalog.table(r.sink_table)
         table_schema = t.schema()
@@ -508,10 +521,11 @@ class JsonIngest:
         written: dict[str, str] = {}
         try:
             os.makedirs(out_dir, exist_ok=True)
+            counts = sink_counts(recs)
             for r in self.rules:
-                part = recs.filter(F.col("sink_table") == r.sink_table)
-                if part.isEmpty():
+                if not counts.get(r.sink_table):
                     continue
+                part = recs.filter(F.col("sink_table") == r.sink_table)
                 dst = os.path.join(out_dir, f"{r.sink_table}.log")
                 part.select("id", "timestamp", "data").coalesce(1).write.mode(
                     "overwrite"
@@ -545,14 +559,17 @@ class JsonIngest:
 
         fresh_appends: set[str] = set()
 
-        def commit_append(table_name: str, df: DataFrame, **kw) -> dict:
+        def commit(table_name: str, write) -> dict:
+            """Run write(table) -> snapshot (a DataFrame or a row
+            append) unless the failed attempt already committed this
+            table, and record the snapshot for rollback/resume."""
             t = self.catalog.table(table_name)
             if table_name in prior:
                 for s in t.snapshots():
                     if s["snapshot_id"] == prior[table_name]:
                         return s
                 del prior[table_name]
-            snap = t.append(df, **kw)
+            snap = write(t)
             committed[table_name] = snap["snapshot_id"]
             attempt.append((table_name, snap["snapshot_id"]))
             fresh_appends.add(table_name)
@@ -574,15 +591,17 @@ class JsonIngest:
 
         try:
             recs = self.records(path).persist()
-            recs.count()
+            # one job materializes the cache AND says which sinks have
+            # rows (was: count() plus one isEmpty() probe per sink)
+            counts = sink_counts(recs)
             snapshot_ids: dict[str, int] = {}
             per_sink: dict[str, int] = {}
             schemas_json: dict[str, str] = {}
             for r in self.rules:
+                if not counts.get(r.sink_table):
+                    continue
                 part = recs.filter(F.col("sink_table") == r.sink_table)
                 docs_only = part.select("data")
-                if docs_only.isEmpty():
-                    continue
                 # Bounded-sample inference + live-schema merge ≙ fold of
                 # bqs.Infer+Merge (bigquery.go:47-62) without the full
                 # Python round-trip. The coverage check (records the
@@ -625,10 +644,8 @@ class JsonIngest:
                         F.current_timestamp().alias("ingested_at"),
                         F.col("_parsed").alias("data"),
                     )
-                    snap = commit_append(
-                        r.sink_table, out,
-                        partition_unit=r.partition_unit, ts_col="timestamp",
-                    )
+                    snap = commit(r.sink_table, lambda t: t.append(
+                        out, partition_unit=r.partition_unit, ts_col="timestamp"))
                     if r.sink_table not in fresh_appends:
                         break  # resumed from a prior attempt: no job ran
                     if not int(obs.get.get("missed") or 0):
@@ -649,18 +666,22 @@ class JsonIngest:
                     inferred = _merge_inferred(
                         inferred, self.spark.read.json(strs).schema
                     )
+                # hard check, NOT assert: must survive python -O
+                # (bq/client.go:240-248); a mismatch aborts the batch
+                # and the except path rolls every commit back
+                if snap["added_rows"] != counts[r.sink_table]:
+                    raise RuntimeError(
+                        f"append-count mismatch on {r.sink_table}: "
+                        f"{snap['added_rows']} written vs "
+                        f"{counts[r.sink_table]} routed")
                 snapshot_ids[r.sink_table] = snap["snapshot_id"]
                 per_sink[r.sink_table] = snap["added_rows"]
                 schemas_json[r.sink_table] = inferred.json()
 
-            audit = self.spark.createDataFrame(
-                [(request_id, batch_id, True, None,
-                  json.dumps(schemas_json), json.dumps(per_sink))],
-                "request_id string, batch_id string, success boolean, error string, "
-                "table_schemas string, log_counts string",
-            ).withColumn("started_at", F.current_timestamp())
-            commit_append("_audit_json", audit,
-                          partition_unit="month", ts_col="started_at")
+            row = (request_id, batch_id, True, None, json.dumps(schemas_json),
+                   json.dumps(per_sink), datetime.now(timezone.utc))
+            commit("_audit_json", lambda t: t.append_rows(
+                [row], JSON_AUDIT_SCHEMA, partition_unit="month", ts_col="started_at"))
             recs.unpersist()
             self.manifest.update(batch_id, STATE_COMPLETED, committed)
             return {

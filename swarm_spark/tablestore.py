@@ -52,6 +52,24 @@ _PART_FMT = {
     "month": "yyyy-MM",
     "year": "yyyy",
 }
+# the same transforms as strftime formats, for rows written without Spark
+_PY_PART_FMT = {"hour": "%Y-%m-%d-%H", "day": "%Y-%m-%d", "month": "%Y-%m", "year": "%Y"}
+
+
+def _session_zone():
+    """The active session's spark.sql.session.timeZone as a tzinfo:
+    a region id (Asia/Tokyo) or a fixed offset (+09:00, UTC+9, Z)."""
+    import datetime as dt
+    import re
+    from zoneinfo import ZoneInfo
+
+    tz = SparkSession.active().conf.get("spark.sql.session.timeZone")
+    m = re.fullmatch(r"(?:UTC|GMT)?([+-])(\d{1,2})(?::?(\d\d))?(?::?(\d\d))?", tz)
+    if m:
+        sign = -1 if m.group(1) == "-" else 1
+        h, mi, s = (int(g or 0) for g in m.group(2, 3, 4))
+        return dt.timezone(sign * dt.timedelta(hours=h, minutes=mi, seconds=s))
+    return dt.timezone.utc if tz in ("Z", "UTC", "GMT") else ZoneInfo(tz)
 
 
 class SchemaConflictError(ValueError):
@@ -492,6 +510,46 @@ class IcepackTable:
 
                 shutil.rmtree(ddir, ignore_errors=True)
             raise
+
+    def append_rows(self, rows: list[tuple], schema: T.StructType,
+                    partition_unit: str = "", ts_col: str = "timestamp") -> dict:
+        """Append a few DRIVER-SIDE rows (an audit record) with no Spark
+        job: pyarrow writes one zstd parquet file per `_p` value into a
+        fresh `_s=` dir, which adopt_dir commits. `schema` is the exact
+        Spark schema the rows follow (recorded like append()'s
+        df.schema, so old and new audit rows merge); timestamps are
+        timezone-aware datetimes, and `_p` is computed in
+        spark.sql.session.timeZone, where date_format puts it. For
+        metadata-sized rows only: they are converted in the driver's
+        Python. For one row a DataFrame append costs two Spark jobs
+        where this costs one file write and a metadata commit."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        prev = self.current_snapshot()
+        unit = (prev.get("partition_unit") or partition_unit) if prev else partition_unit
+        ddir = None
+        if rows:
+            ddir = os.path.join(self.data, f"_s={uuid.uuid4().hex}")
+            by_p: dict[str, list[tuple]] = {}
+            if unit:
+                zone = _session_zone()
+                i = schema.names.index(ts_col)
+                for r in rows:
+                    p = r[i].astimezone(zone).strftime(_PY_PART_FMT[unit])
+                    by_p.setdefault(f"_p={p}", []).append(r)
+            else:
+                by_p[""] = list(rows)
+            asch = to_arrow_schema(schema)
+            for sub, part in by_p.items():
+                os.makedirs(os.path.join(ddir, sub), exist_ok=True)
+                tbl = pa.Table.from_pylist(
+                    [dict(zip(schema.names, r)) for r in part], schema=asch)
+                pq.write_table(tbl, os.path.join(
+                    ddir, sub, f"part-{uuid.uuid4().hex}.zstd.parquet"),
+                    compression="zstd")
+        return self.adopt_dir(ddir, len(rows), schema, partition_unit, ts_col)
 
     def adopt_dir(self, ddir: str | None, added_rows: int,
                   schema: T.StructType, partition_unit: str = "",

@@ -61,7 +61,7 @@ def test_protocol_matches_icepack(spark):
     from swarm_spark.catalogs import SparkCatalogTable
     from swarm_spark.tablestore import IcepackTable
 
-    for method in ("append", "read", "exists", "schema", "snapshots", "rollback",
+    for method in ("append", "append_rows", "read", "exists", "schema", "snapshots", "rollback",
                    "expire_snapshots"):
         assert hasattr(IcepackTable, method)
         assert hasattr(SparkCatalogTable, method)

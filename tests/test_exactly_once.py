@@ -105,6 +105,40 @@ class TestPartialFailureRollback:
             assert res.snapshot_ids[sink] == sid
             assert p2.catalog.table(sink).read(spark).count() == res.per_sink_rows[sink]
 
+    def test_audit_failure_after_adoption_rolls_back(
+        self, spark, tmp_path, transcripts, monkeypatch
+    ):
+        """Every sink adopted its staged dir, then the audit row write
+        fails → each sink snapshot is rolled back, and a retry lands
+        exactly one copy per sink and one audit row."""
+        p = make_pipeline(spark, tmp_path)
+        orig_append_rows = IcepackTable.append_rows
+
+        def boom(self, rows, schema, **kw):
+            if self.name == "_audit":
+                raise RuntimeError("audit exploded after adoption")
+            return orig_append_rows(self, rows, schema, **kw)
+
+        monkeypatch.setattr(IcepackTable, "append_rows", boom)
+        with pytest.raises(RuntimeError, match="audit exploded"):
+            p.run(transcripts, batch_id="pf3")
+        monkeypatch.undo()
+
+        st = p.manifest.get("pf3")
+        assert st.state == "failed" and not st.snapshot_ids
+        for table in ("sink_errors", "sink_tools", "sink_assistant",
+                      "sink_user", "_agg_hourly", "_audit"):
+            assert not p.catalog.table(table).exists(), f"{table} kept a snapshot"
+
+        res = p.run(transcripts, batch_id="pf3")
+        assert not res.skipped
+        once = {s: p.catalog.table(s).read(spark).count()
+                for s in res.per_sink_rows}
+        assert once == res.per_sink_rows
+        audit = p.catalog.table("_audit").read(spark).collect()
+        assert [r.batch_id for r in audit] == ["pf3"]
+        assert {i.sink: i.log_count for i in audit[0].ingests} == res.per_sink_rows
+
     def test_count_mismatch_raises_not_assert(self):
         """The X6 written-vs-routed verify must survive python -O:
         a RuntimeError, never a bare assert."""

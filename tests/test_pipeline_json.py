@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import gzip
 import json
+from datetime import datetime, timezone
 
 import pytest
 
@@ -297,14 +298,14 @@ class TestJsonPartialFailure:
                json.dumps({"log_id": "x", "event_time": 1.0}))
         ing = JsonIngest(spark, str(tmp_path / "wh"), EVENTS, RULES)
 
-        orig_append = IcepackTable.append
+        orig_append_rows = IcepackTable.append_rows
 
-        def boom(self, df, **kw):
+        def boom(self, rows, schema, **kw):
             if self.name == "_audit_json":
                 raise RuntimeError("audit exploded")
-            return orig_append(self, df, **kw)
+            return orig_append_rows(self, rows, schema, **kw)
 
-        monkeypatch.setattr(IcepackTable, "append", boom)
+        monkeypatch.setattr(IcepackTable, "append_rows", boom)
         with pytest.raises(RuntimeError, match="audit exploded"):
             ing.run(str(tmp_path / "a.log"), batch_id="pf")
         monkeypatch.undo()
@@ -316,6 +317,69 @@ class TestJsonPartialFailure:
         res = ing.run(str(tmp_path / "a.log"), batch_id="pf")
         assert not res["skipped"]
         assert ing.catalog.table("logs").read(spark).count() == 1
+
+    def test_sink_append_count_mismatch_rolls_back(self, spark, tmp_path, monkeypatch):
+        """A sink write that loses a row must fail the batch with a
+        RuntimeError (not an assert, so python -O keeps it) and roll
+        the sink back; no audit row lands."""
+        from pyspark.sql import functions as F
+
+        from swarm_spark.tablestore import IcepackTable
+
+        _write(tmp_path / "a.log", LOG_LINES)
+        ing = JsonIngest(spark, str(tmp_path / "wh"), EVENTS, RULES)
+        orig_append = IcepackTable.append
+
+        def lossy(self, df, **kw):
+            if self.name == "logs":
+                df = df.filter(F.col("id") != "a2")
+            return orig_append(self, df, **kw)
+
+        monkeypatch.setattr(IcepackTable, "append", lossy)
+        with pytest.raises(RuntimeError, match="append-count mismatch on logs: 1 written vs 2"):
+            ing.run(str(tmp_path / "a.log"), batch_id="lossy")
+        monkeypatch.undo()
+
+        st = ing.manifest.get("lossy")
+        assert st.state == "failed" and not st.snapshot_ids
+        assert not ing.catalog.table("logs").exists()
+        assert not ing.catalog.table("_audit_json").exists()
+        res = ing.run(str(tmp_path / "a.log"), batch_id="lossy")
+        assert res["per_sink_rows"] == {"logs": 2}
+        assert ing.catalog.table("logs").read(spark).count() == 2
+
+
+class TestJsonJobCount:
+    def test_one_sink_run_job_budget(self, spark, tmp_path):
+        """Pin the Spark jobs of a one-sink push: the per-sink count
+        job, the bounded inference sample and the sink write; the
+        audit row adds none. AQE reports shuffle stages as separate
+        job ids, so the pin is an upper bound."""
+        from swarm_spark.pipeline_json import JSON_AUDIT_SCHEMA
+
+        _write(tmp_path / "warm.log", LOG_LINES)
+        _write(tmp_path / "a.log", LOG_LINES)
+        ing = JsonIngest(spark, str(tmp_path / "wh"), EVENTS, RULES)
+        ing.run(str(tmp_path / "warm.log"), batch_id="warm")
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def jobs(tag, fn):
+            sc.setJobGroup(f"jg-{tag}", tag)
+            try:
+                fn()
+            finally:
+                sc.setJobGroup(None, None)
+            return len(tracker.getJobIdsForGroup(f"jg-{tag}"))
+
+        n_run = jobs("json-run", lambda: ing.run(str(tmp_path / "a.log"), batch_id="b"))
+        assert n_run <= 7, f"one-sink JsonIngest.run ran {n_run} jobs"
+        row = ("r", "b", True, None, "{}", "{}", datetime.now(timezone.utc))
+        t = ing.catalog.table("_audit_json")
+        n_rows = jobs("append-rows", lambda: t.append_rows(
+            [row], JSON_AUDIT_SCHEMA, partition_unit="month", ts_col="started_at"))
+        assert n_rows == 0, f"append_rows ran {n_rows} Spark jobs"
+        assert t.read(spark).count() == 3
 
 
 class TestInferenceConvergence:

@@ -115,6 +115,102 @@ class TestIcepackTable:
         assert t.read(spark).count() == 1  # orphan invisible
 
 
+class TestAppendRows:
+    """Driver-side row appends (the audit rows): pyarrow-written files
+    adopted as a snapshot, with no Spark job."""
+
+    @staticmethod
+    def _utc(*a):
+        import datetime as dt
+
+        return dt.datetime(*a, tzinfo=dt.timezone.utc)
+
+    def test_rows_join_audit_tables_written_by_spark(self, spark, tmp_path):
+        """Warehouses whose audit tables hold rows from the former
+        createDataFrame + append path accept a row append: the
+        recorded schemas match exactly (nested nullability included),
+        so merge_schemas raises no SchemaConflictError."""
+        from pyspark.sql import functions as F
+
+        from swarm_spark.pipeline import AUDIT_SCHEMA
+        from swarm_spark.pipeline_json import JSON_AUDIT_SCHEMA
+
+        cat = IcepackCatalog(str(tmp_path))
+        cases = [
+            ("_audit", AUDIT_SCHEMA,
+             "request_id string, batch_id string, success boolean, error string, "
+             "input_rows bigint, routed_rows bigint, elapsed_sec double, "
+             "ingests array<struct<sink:string,log_count:bigint,"
+             "snapshot_id:bigint,success:boolean>>",
+             ("old", "b1", True, None, 5, 4, 1.5, [("s", 4, 1, True)]),
+             ("new", "b2", True, None, 6, 3, 0.5, [("s", 3, 2, True)])),
+            ("_audit_json", JSON_AUDIT_SCHEMA,
+             "request_id string, batch_id string, success boolean, error string, "
+             "table_schemas string, log_counts string",
+             ("old", "b1", True, None, "{}", '{"s": 4}'),
+             ("new", "b2", True, None, "{}", '{"s": 3}')),
+        ]
+        for name, schema, ddl, old, new in cases:
+            t = cat.table(name)
+            t.append(spark.createDataFrame([old], ddl)
+                     .withColumn("started_at", F.current_timestamp()),
+                     partition_unit="month", ts_col="started_at")
+            assert t.schema() == schema
+            snap = t.append_rows([new + (self._utc(2026, 3, 1),)], schema,
+                                 partition_unit="month", ts_col="started_at")
+            assert snap["added_rows"] == 1
+            got = {r.request_id: r for r in t.read(spark).collect()}
+            assert set(got) == {"old", "new"}
+            assert got["new"].batch_id == "b2" and got["old"].batch_id == "b1"
+            if name == "_audit":
+                assert got["new"].ingests[0].log_count == 3
+                assert got["old"].ingests[0].log_count == 4
+
+    @pytest.mark.parametrize("zone", ["Asia/Tokyo", "+09:00"])
+    def test_partition_follows_session_time_zone(self, spark, tmp_path, zone):
+        """_p is computed where date_format computes it: in the session
+        time zone (a region id or a fixed offset), so 23:30Z on Jan 31
+        lands in February in Tokyo; the instant itself reads back
+        unchanged."""
+        import os
+
+        from pyspark.sql import functions as F
+
+        cat = IcepackCatalog(str(tmp_path))
+        t = cat.table("tz")
+        schema = T.StructType([T.StructField("a", T.LongType()),
+                               T.StructField("ts", T.TimestampType())])
+        ts = self._utc(2026, 1, 31, 23, 30)
+        prev = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        try:
+            snap = t.append_rows([(1, ts)], schema, partition_unit="month", ts_col="ts")
+            want = spark.range(1).select(
+                F.date_format(F.lit(ts), "yyyy-MM")).first()[0]
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", prev)
+        assert want == "2026-02"
+        (ddir,) = snap["data_dirs"]
+        assert sorted(os.listdir(ddir)) == ["_p=2026-02", "_stats.json"]
+        row = t.read(spark).select("a", F.unix_micros("ts").alias("us")).first()
+        assert row.a == 1 and row.us == int(ts.timestamp()) * 1_000_000
+
+    def test_adopted_dir_has_stats_sidecar(self, spark, tmp_path):
+        from swarm_spark import filestats
+
+        cat = IcepackCatalog(str(tmp_path))
+        t = cat.table("stats")
+        schema = T.StructType([T.StructField("a", T.LongType()),
+                               T.StructField("ts", T.TimestampType())])
+        snap = t.append_rows([(3, self._utc(2026, 1, 1)), (7, self._utc(2026, 2, 1))],
+                             schema, partition_unit="month", ts_col="ts")
+        (ddir,) = snap["data_dirs"]
+        st = filestats.load_dir_stats(ddir)
+        assert st is not None and len(st["files"]) == 2
+        assert sum(f["rows"] for f in st["files"].values()) == 2
+        assert t.read(spark).count() == 2
+
+
 class TestManifestPlanning:
     def test_many_snapshots_flat_plan(self, spark, tmp_path):
         """50 appends: read() must stay ONE parquet relation (no Union

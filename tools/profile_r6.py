@@ -90,14 +90,13 @@ def profile_ingest(spark):
     tm.lap("plan build")
     committed = {}
 
-    def commit_adopt(name, ddir, n, schema, unit=""):
-        tt = p.catalog.table(name)
-        snap = tt.adopt_dir(ddir, n, schema, unit, "timestamp")
+    def commit(name, write):
+        snap = write(p.catalog.table(name))
         committed[name] = snap["snapshot_id"]
         return snap
 
     out = p._single_pass_write(routed2, rid, sinks, rule_by_sink, "",
-                               commit_adopt, obs_in)
+                               commit, obs_in)
     tm.lap("single_pass_write (write+verify+adopts)")
     agg = p.aggregate(routed2)
     p.catalog.table("_agg_hourly").append(

@@ -530,6 +530,7 @@ class IngestPipeline:
             return snap
 
         t0 = time.time()
+        routed = None
         try:
             # Input row count rides the plan as an Observation — it is
             # collected during cache materialization, never via a
@@ -645,8 +646,6 @@ class IngestPipeline:
                 commit(cfg.audit_table, lambda t: t.append_rows(
                     [row], AUDIT_SCHEMA, partition_unit="month", ts_col="started_at"))
 
-            if cfg.persist_routed != "none":
-                routed.unpersist()
             self.manifest.update(batch_id, STATE_COMPLETED, committed)
             return LoadResult(
                 batch_id, request_id, False, per_sink_rows, dict(committed),
@@ -668,3 +667,6 @@ class IngestPipeline:
                           ignore_errors=True)
             self.manifest.update(batch_id, STATE_FAILED, committed)
             raise
+        finally:
+            if routed is not None and cfg.persist_routed != "none":
+                routed.unpersist()

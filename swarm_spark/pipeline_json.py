@@ -589,6 +589,7 @@ class JsonIngest:
             fresh_appends.discard(table_name)
             self.manifest.update(batch_id, STATE_RUNNING, committed)
 
+        recs = None
         try:
             recs = self.records(path).persist()
             # one job materializes the cache AND says which sinks have
@@ -682,7 +683,6 @@ class JsonIngest:
                    json.dumps(per_sink), datetime.now(timezone.utc))
             commit("_audit_json", lambda t: t.append_rows(
                 [row], JSON_AUDIT_SCHEMA, partition_unit="month", ts_col="started_at"))
-            recs.unpersist()
             self.manifest.update(batch_id, STATE_COMPLETED, committed)
             return {
                 "batch_id": batch_id, "skipped": False,
@@ -695,3 +695,6 @@ class JsonIngest:
                     committed.pop(table_name, None)
             self.manifest.update(batch_id, STATE_FAILED, committed)
             raise
+        finally:
+            if recs is not None:
+                recs.unpersist()

@@ -37,8 +37,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -118,12 +120,29 @@ def merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
     return T.StructType(out)
 
 
+class _Rewrite(NamedTuple):
+    """One attempt of a copy-on-write op, planned against `base` (the
+    CURRENT it read, or a stand-in carrying the parent id, schema and
+    layout): `transform` maps the live rows of `affected` to the rows
+    to write, `counters(live_rows, written_rows)` gives the op's
+    result keys."""
+    base: dict
+    affected: list[str]
+    untouched: list[str]
+    transform: Callable[[DataFrame], DataFrame]
+    counters: Callable[[int, int], dict] = lambda live, n: {}
+
+
 class IcepackTable:
     # Minimum AGE of a claimed-but-unadvanced snap file before another
     # writer may adopt it as orphaned (its owner presumed dead). A
     # live writer's claim→CURRENT window is sub-millisecond, so 1 s is
     # a generous safety margin without wedging recovery.
     ADOPT_GRACE_SEC = 1.0
+    # Attempts a rewrite (or mor delete) makes before giving up to
+    # concurrent commits; each lost attempt recomputes from the new
+    # CURRENT.
+    COMMIT_RETRIES = 10
 
     def __init__(self, root: str, name: str, store=None):
         self.name = name
@@ -160,6 +179,12 @@ class IcepackTable:
             raise FileNotFoundError(
                 f"table {self.name}: CURRENT={sid} but snapshot is missing"
             )
+        return snap
+
+    def _require_snapshot(self) -> dict:
+        snap = self.current_snapshot()
+        if snap is None:
+            raise FileNotFoundError(f"table {self.name} has no snapshots")
         return snap
 
     def snapshots(self) -> list[dict]:
@@ -338,6 +363,59 @@ class IcepackTable:
             continue
         raise RuntimeError(f"commit contention on table {self.name}")
 
+    def _commit_new(self, new: dict, ddir: str | None = None) -> dict:
+        """Commit `new`, which may reference the freshly written `ddir`:
+        on CommitConflict the dir is stale and goes; after a commit
+        that does not reference it (an empty rewrite) it goes too."""
+        try:
+            self._commit(new)
+        except CommitConflict:
+            if ddir is not None:
+                shutil.rmtree(ddir, ignore_errors=True)
+            raise
+        if ddir is not None and ddir not in new["data_dirs"]:
+            shutil.rmtree(ddir, ignore_errors=True)
+        return new
+
+    def _retry(self, op: str, attempt: Callable[[], dict]) -> dict:
+        """Run `attempt()` until it returns; a CommitConflict (CURRENT
+        moved under a rewrite) re-runs it from the new CURRENT."""
+        for _ in range(self.COMMIT_RETRIES):
+            try:
+                return attempt()
+            except CommitConflict:
+                continue
+        raise CommitConflict(
+            f"{op} on table {self.name} kept losing to concurrent commits")
+
+    @staticmethod
+    def _successor(base: dict, op: str, data_dirs: list[str], row_count: int,
+                   deletes: list[dict], added_rows: int = 0) -> dict:
+        """The snapshot an `op` commit makes over `base`: CURRENT as the
+        op read it, or a stand-in carrying the parent's snapshot_id
+        plus the schema, partition_unit and ts_col to record. User
+        metadata (every other non-underscore key of `base`: consumer
+        checkpoints, index scalars) carries forward but never shadows
+        a core field; underscore keys (_base_dirs, _writer) are
+        commit-scoped and never carry."""
+        new = {
+            "parent": base.get("snapshot_id"),
+            "op": op,
+            "data_dirs": data_dirs,
+            "schema": base["schema"],
+            "partition_unit": base.get("partition_unit", ""),
+            "ts_col": base.get("ts_col", "timestamp"),
+            "row_count": row_count,
+            "added_rows": added_rows,
+            "committed_at": time.time(),
+            "snapshot_id": None,
+            "deletes": deletes,
+        }
+        for key, val in base.items():
+            if not key.startswith("_"):
+                new.setdefault(key, val)
+        return new
+
     def rollback(self, snapshot_id: int) -> bool:
         """Undo a committed snapshot IF it is still CURRENT: point
         CURRENT back at its parent, delete the snapshot file, and
@@ -348,8 +426,6 @@ class IcepackTable:
         contract of a multi-sink batch (≙ aborting a pending BigQuery
         write stream instead of finalizing it,
         /root/reference/pkg/infra/bq/client.go:240-263)."""
-        import shutil
-
         cur = self._current_id()
         if cur != snapshot_id:
             return False
@@ -453,7 +529,8 @@ class IcepackTable:
                          require_parent_meta: dict | None = None) -> dict:
         """Shared commit path for append() and adopt_dir(): schema
         evolution + snapshot construction around an already-written
-        (or absent, when n==0) data dir."""
+        (or absent, when n==0) data dir, which goes if the conditional
+        commit fails."""
         prev = self.current_snapshot()
         if prev is not None:
             old_schema = T.StructType.fromJson(json.loads(prev["schema"]))
@@ -461,30 +538,21 @@ class IcepackTable:
             partition_unit = prev.get("partition_unit") or partition_unit
         else:
             schema = incoming_schema
-        new_dirs = [ddir] if ddir is not None else []
-        snap = {
-            "parent": prev["snapshot_id"] if prev else None,
-            "op": "append",
-            "data_dirs": (prev["data_dirs"] if prev else []) + new_dirs,
+        base = {**(extra_meta or {}),
+                "snapshot_id": prev["snapshot_id"] if prev else None,
+                "schema": json.dumps(schema.jsonValue()),
+                "partition_unit": partition_unit, "ts_col": ts_col}
+        prev_dirs = prev["data_dirs"] if prev else []
+        snap = self._successor(
+            base, "append", prev_dirs + ([ddir] if ddir is not None else []),
+            (prev.get("row_count", 0) if prev else 0) + n,
             # pending merge-on-read masks survive appends untouched —
             # the new dirs are outside every entry's applies_to scope
-            "deletes": list(prev.get("deletes") or []) if prev else [],
-            "_base_dirs": prev["data_dirs"] if prev else [],
-            "schema": json.dumps(schema.jsonValue()),
-            "partition_unit": partition_unit,
-            "ts_col": ts_col,
-            "row_count": (prev.get("row_count", 0) if prev else 0) + n,
-            "added_rows": n,
-            "committed_at": time.time(),
-        }
-        if extra_meta:
-            for k, v in extra_meta.items():
-                snap.setdefault(k, v)  # user metadata never shadows core fields
+            list(prev.get("deletes") or []) if prev else [], added_rows=n)
+        snap["_base_dirs"] = prev_dirs
         if require_parent_meta:
             snap["_require_parent_meta"] = require_parent_meta
-        snap["snapshot_id"] = None
-        self._commit(snap)
-        return snap
+        return self._commit_new(snap, ddir)
 
     def append(self, df: DataFrame, partition_unit: str = "", ts_col: str = "timestamp",
                extra_meta: dict | None = None,
@@ -495,21 +563,14 @@ class IcepackTable:
         the data land in ONE atomic commit. `require_parent_meta`
         makes the append CONDITIONAL: it commits only if the parent
         snapshot at commit time carries those key→values, else raises
-        CommitConflict (the data dir is rolled back by the caller's
-        normal error path; orphan GC also covers it)."""
+        CommitConflict (the written data dir is removed; orphan GC
+        also covers it)."""
         prev = self.current_snapshot()
         unit = (prev.get("partition_unit") or partition_unit) if prev else partition_unit
         ddir, n = self._write_data(df, unit, ts_col)
-        try:
-            return self._append_snapshot(ddir, n, df.schema, partition_unit, ts_col,
-                                         extra_meta=extra_meta,
-                                         require_parent_meta=require_parent_meta)
-        except CommitConflict:
-            if ddir is not None:
-                import shutil
-
-                shutil.rmtree(ddir, ignore_errors=True)
-            raise
+        return self._append_snapshot(ddir, n, df.schema, partition_unit, ts_col,
+                                     extra_meta=extra_meta,
+                                     require_parent_meta=require_parent_meta)
 
     def append_rows(self, rows: list[tuple], schema: T.StructType,
                     partition_unit: str = "", ts_col: str = "timestamp") -> dict:
@@ -573,8 +634,6 @@ class IcepackTable:
         if ddir is not None:
             dst = os.path.join(self.data, f"_s={uuid.uuid4().hex}")
             if os.path.abspath(os.path.dirname(ddir)) != os.path.abspath(self.data):
-                import shutil
-
                 try:
                     os.rename(ddir, dst)
                 except OSError:
@@ -607,15 +666,8 @@ class IcepackTable:
         """WAP step 2 input: the staged rows, for audit queries
         (expectations, row counts, sampling) — reads ONLY the staged
         dir, never the table."""
-        df = self._scan_dirs(spark, [handle["stage_dir"]])
-        if "_p" in df.columns:
-            df = df.drop("_p")
         schema = T.StructType.fromJson(json.loads(handle["schema"]))
-        return df.select(*[
-            F.col(f.name).cast(f.dataType) if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ])
+        return self._live_rows(spark, [handle["stage_dir"]], [], schema)
 
     def publish_stage(self, handle: dict,
                       extra_meta: dict | None = None) -> dict:
@@ -631,49 +683,31 @@ class IcepackTable:
     def abort_stage(self, handle: dict) -> None:
         """Discard a staged write (audit failed). Nothing was ever
         visible; this only reclaims the files."""
-        import shutil
-
         shutil.rmtree(handle["stage_dir"], ignore_errors=True)
 
     def overwrite(self, df: DataFrame, partition_unit: str = "",
                   ts_col: str = "timestamp", op: str = "overwrite",
                   extra_meta: dict | None = None,
                   require_parent_meta: dict | None = None) -> dict:
+        """Replace the table's contents with `df` (last write wins over
+        concurrent appends unless `op` is a rewrite op); `extra_meta`
+        and `require_parent_meta` as in append()."""
         prev = self.current_snapshot()
         ddir, n = self._write_data(df, partition_unit, ts_col)
-        snap = {
-            "parent": prev["snapshot_id"] if prev else None,
-            "op": op,
-            "data_dirs": [ddir],
-            "schema": json.dumps(df.schema.jsonValue()),
-            "partition_unit": partition_unit,
-            "ts_col": ts_col,
-            "row_count": n,
-            "added_rows": n,
-            "committed_at": time.time(),
-            "snapshot_id": None,
-        }
-        if extra_meta:
-            for k, v in extra_meta.items():
-                snap.setdefault(k, v)
+        base = {**(extra_meta or {}),
+                "snapshot_id": prev["snapshot_id"] if prev else None,
+                "schema": json.dumps(df.schema.jsonValue()),
+                "partition_unit": partition_unit, "ts_col": ts_col}
+        snap = self._successor(base, op, [ddir], n, [], added_rows=n)
         if require_parent_meta:
             snap["_require_parent_meta"] = require_parent_meta
-        try:
-            self._commit(snap)
-        except CommitConflict:
-            import shutil
-
-            shutil.rmtree(ddir, ignore_errors=True)  # orphaned staging
-            raise
-        return snap
+        return self._commit_new(snap, ddir)
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Snapshot GC (expire_snapshots + vacuum): delete snapshot
         metadata older than the newest `keep_last` and remove data
         dirs no longer referenced by any kept snapshot. Time travel is
         only possible to kept snapshots afterwards."""
-        import shutil
-
         snaps = self.snapshots()
         if len(snaps) <= keep_last:
             return {"expired": 0, "data_dirs_removed": 0}
@@ -698,9 +732,70 @@ class IcepackTable:
             self.store.delete_snap(s["snapshot_id"])  # absent = already expired
         return {"expired": len(drop), "data_dirs_removed": removed}
 
+    def _rewrite(self, spark: SparkSession, op: str,
+                 plan: Callable[[], _Rewrite | dict],
+                 write: Callable[..., tuple[str, int]] | None = None) -> dict:
+        """The copy-on-write loop under merge_upsert, delete_where,
+        update_where and compact, retried until its commit lands. Each
+        attempt calls `plan()`, which reads CURRENT and returns either
+        the op's result as is (nothing to rewrite) or a _Rewrite. The
+        live rows of the affected dirs (pending merge-on-read masks
+        folded, projected to the base schema) pass through its
+        transform into ONE new dir, written by `write(df, unit,
+        ts_col)` (default _write_data). The successor keeps the
+        untouched dirs plus the new one and the masks narrowed to the
+        untouched dirs (the rewrite folded the rest); its row_count
+        counts physical rows. The affected dirs' live-row count rides
+        the write job and feeds the op's counters. Rewrite ops commit
+        strictly: a commit landing since `plan()` read CURRENT raises
+        CommitConflict and the attempt re-runs from the new CURRENT."""
+        def attempt() -> dict:
+            rw = plan()
+            if isinstance(rw, dict):
+                return rw
+            base, pending = rw.base, rw.base.get("deletes") or []
+            schema = T.StructType.fromJson(json.loads(base["schema"]))
+            # no observation over an empty local relation: the optimizer
+            # can drop it, and its get() then blocks forever
+            obs = Observation() if rw.affected else None
+            if obs:
+                live = self._live_rows(spark, rw.affected, pending, schema) \
+                    .observe(obs, F.count(F.lit(1)).alias("n"))
+            else:
+                live = spark.createDataFrame([], schema)
+            ddir, n = (write or self._write_data)(
+                rw.transform(live), base.get("partition_unit", ""),
+                base.get("ts_col", "timestamp"))
+            live_n = int(obs.get["n"]) if obs else 0
+            row_count = n  # the new dir, plus whatever the untouched dirs hold
+            if rw.untouched:
+                row_count += base.get("row_count", 0) - self._physical_rows(
+                    spark, rw.affected, pending, live_n)
+            new = self._successor(
+                base, op, rw.untouched + ([ddir] if n else []), row_count,
+                self._narrow_deletes(pending, rw.untouched),
+                added_rows=n if base.get("snapshot_id") is None else 0)
+            self._commit_new(new, ddir)
+            return {**new, "dirs_rewritten": len(rw.affected),
+                    "dirs_untouched": len(rw.untouched),
+                    **rw.counters(live_n, n)}
+
+        return self._retry(op, attempt)
+
+    def _physical_rows(self, spark: SparkSession, dirs: list[str],
+                       pending: list[dict], live_n: int) -> int:
+        """Rows stored in `dirs`, the unit of snapshot row_count: the
+        stats sidecars' sum (metadata, no job); without one, `live_n`
+        (the dirs' live rows) when no merge-on-read mask hides rows,
+        else a count of the UNMASKED scan."""
+        sidecars = [filestats.load_dir_stats(d) for d in dirs]
+        if all(s and s.get("files") for s in sidecars):
+            return sum(f["rows"] for s in sidecars for f in s["files"].values())
+        return self._scan_dirs(spark, dirs).count() if pending else live_n
+
     def merge_upsert(self, spark: SparkSession, df: DataFrame | None,
                      keys: list[str],
-                     max_retries: int = 10, keys_cap: int = 200_000,
+                     keys_cap: int = 200_000,
                      rebuild=None) -> dict:
         """MERGE INTO analogue (upsert by key): incoming rows replace
         same-key rows, others are inserted. No Delta/Iceberg jars in
@@ -737,21 +832,20 @@ class IcepackTable:
         (pkg/infra/bq/client.go) — MERGE is the lakehouse completion
         of the K1 commit family for mutable dimensions (entity
         profiles, latest-state tables)."""
-        import shutil
-
         if df is None and rebuild is None:
             raise ValueError("merge_upsert needs df or rebuild")
-        for _attempt in range(max_retries):
+
+        def plan() -> _Rewrite:
             # `rebuild` (optional zero-arg callable returning the
             # incoming DataFrame) is re-invoked on EVERY attempt, so a
             # CommitConflict retry recomputes a DERIVED batch (e.g. an
             # SCD2 delta) from the fresh table state instead of
-            # re-committing a stale one (r5-advice fix). Ordering
-            # matters: the parent snapshot is read FIRST, so any
-            # commit landing after it — including during the rebuild —
-            # makes our commit conflict and the loop retry; the landed
-            # attempt's delta is therefore always derived from a state
-            # at least as new as its parent.
+            # re-committing a stale one. Ordering matters: the parent
+            # snapshot is read FIRST, so any commit landing after it —
+            # including during the rebuild — makes our commit conflict
+            # and the attempt re-run; the landed attempt's delta is
+            # therefore always derived from a state at least as new as
+            # its parent.
             snap = self.current_snapshot()
             incoming = rebuild() if rebuild is not None else df
             if snap is None:
@@ -760,117 +854,40 @@ class IcepackTable:
                 # NOT append: append's commit REBASES over a concurrent
                 # append landing between our read and commit, which
                 # would UNION rows sharing incoming keys where MERGE
-                # semantics require replacement. On conflict the loop
-                # re-reads the now non-empty table and takes the scoped
-                # path (r5-advice fix).
-                ddir, n = self._write_data(incoming, "", "timestamp")
-                new = {
-                    "parent": None,
-                    "op": "merge",
-                    "data_dirs": [ddir] if n else [],
-                    "schema": json.dumps(incoming.schema.jsonValue()),
-                    "partition_unit": "",
-                    "ts_col": "timestamp",
-                    "row_count": n,
-                    "added_rows": n,
-                    "committed_at": time.time(),
-                    "snapshot_id": None,
-                    "deletes": [],
-                }
-                try:
-                    self._commit(new)
-                except CommitConflict:
-                    shutil.rmtree(ddir, ignore_errors=True)
-                    continue
-                if not n:
-                    shutil.rmtree(ddir, ignore_errors=True)
-                return {**new, "dirs_rewritten": 0, "dirs_untouched": 0,
-                        "rows_matched": 0, "rows_inserted": n}
-            schema = merge_schemas(
-                T.StructType.fromJson(json.loads(snap["schema"])),
-                incoming.schema,
-            )
-            dirs = snap["data_dirs"]
-            keyset = incoming.select(*keys).distinct()
-            affected, untouched = self._merge_scope(spark, keyset, keys,
-                                                    dirs, keys_cap)
-            pending = snap.get("deletes") or []
-            obs = obs_cur = None
-            if affected:
-                current = self._scan_dirs(spark, affected, keep_s=bool(pending))
-                if pending:
-                    current = self._apply_delete_masks(spark, current, pending)
-                for aux in ("_s", "_p"):
-                    if aux in current.columns:
-                        current = current.drop(aux)
-                # LIVE (post-mask) row count of the affected dirs rides
-                # the write job too — rows_matched must count replaced
-                # live rows, not physical rows a folded mask removed
-                obs_cur = Observation()
-                current = current.observe(obs_cur, F.count(F.lit(1)).alias("n"))
-                kept = current.join(keyset, keys, "left_anti")
-                # survivor count rides the write job (no second scan)
-                obs = Observation()
-                kept = kept.observe(obs, F.count(F.lit(1)).alias("n"))
+                # semantics require replacement. On conflict the next
+                # attempt reads the now non-empty table and scopes.
+                schema = incoming.schema
+                base = {"snapshot_id": None, "row_count": 0,
+                        "schema": json.dumps(schema.jsonValue())}
+                affected, untouched = [], []
             else:
-                kept = spark.createDataFrame([], schema)
-            merged = kept.unionByName(incoming, allowMissingColumns=True)
-            cols = [
-                F.col(f.name) if f.name in merged.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-            merged = merged.select(*cols)
-            sidecars = [filestats.load_dir_stats(d) for d in affected]
-            if all(s and s.get("files") for s in sidecars):
-                before = sum(
-                    f["rows"] for s in sidecars for f in s["files"].values()
-                )
-            else:
-                before = None  # fall back to the observation after the write
-            ddir, n_written = self._write_data(
-                merged, snap.get("partition_unit", ""),
-                snap.get("ts_col", "timestamp"))
-            kept_n = int(obs.get["n"]) if obs is not None else 0
-            if before is None:
-                before = self._scan_dirs(spark, affected).count() if affected else 0
-            new = {
-                "parent": snap["snapshot_id"],
-                "op": "merge",
-                "data_dirs": untouched + ([ddir] if n_written else []),
-                "schema": json.dumps(schema.jsonValue()),
-                "partition_unit": snap.get("partition_unit", ""),
-                "ts_col": snap.get("ts_col", "timestamp"),
-                "row_count": snap.get("row_count", 0) - before + n_written,
-                "added_rows": 0,
-                "committed_at": time.time(),
-                "snapshot_id": None,
-                "deletes": self._narrow_deletes(pending, untouched),
-            }
-            for key, val in snap.items():  # user metadata carries forward
-                if not key.startswith("_"):
-                    new.setdefault(key, val)
-            try:
-                self._commit(new)
-                if not n_written:
-                    shutil.rmtree(ddir, ignore_errors=True)
-                live_before = (int(obs_cur.get["n"])
-                               if obs_cur is not None else before)
-                new["dirs_rewritten"] = len(affected)
-                new["dirs_untouched"] = len(untouched)
-                # matched = LIVE rows replaced (mask-folded rows are
-                # not "matched"); row_count above uses the PHYSICAL
-                # before — folded rows do leave storage
-                new["rows_matched"] = live_before - kept_n
-                new["rows_inserted"] = (n_written - kept_n) \
-                    - new["rows_matched"]
-                return new
-            except CommitConflict:
-                shutil.rmtree(ddir, ignore_errors=True)  # stale rewrite
-                continue
-        raise CommitConflict(
-            f"merge on table {self.name} kept losing to concurrent commits"
-        )
+                schema = merge_schemas(
+                    T.StructType.fromJson(json.loads(snap["schema"])),
+                    incoming.schema)
+                base = {**snap, "schema": json.dumps(schema.jsonValue())}
+                keyset = incoming.select(*keys).distinct()
+                affected, untouched = self._merge_scope(
+                    spark, keyset, keys, snap["data_dirs"], keys_cap)
+            kept = Observation()
+
+            def transform(live: DataFrame) -> DataFrame:
+                if affected:
+                    # survivor count rides the write job (no second scan)
+                    live = live.join(keyset, keys, "left_anti") \
+                        .observe(kept, F.count(F.lit(1)).alias("n"))
+                return live.unionByName(incoming, allowMissingColumns=True) \
+                    .select(*schema.names)
+
+            def counters(live_n: int, n: int) -> dict:
+                # matched = LIVE rows replaced (mask-folded rows are not
+                # "matched"); snapshot row_count counts physical rows
+                kept_n = int(kept.get["n"]) if affected else 0
+                return {"rows_matched": live_n - kept_n,
+                        "rows_inserted": n - live_n}
+
+            return _Rewrite(base, affected, untouched, transform, counters)
+
+        return self._rewrite(spark, "merge", plan)
 
     def _merge_scope(self, spark: SparkSession, keyset: DataFrame,
                      keys: list[str], dirs: list[str],
@@ -908,7 +925,6 @@ class IcepackTable:
         return affected, untouched
 
     def compact(self, spark: SparkSession, target_files: int | None = None,
-                max_retries: int = 10,
                 cluster_by: list[str] | None = None,
                 zorder_by: list[str] | None = None,
                 partition_unit: str | None = None,
@@ -940,47 +956,20 @@ class IcepackTable:
         one honest rewrite instead of silently wrong ts_between reads;
         pre-compaction snapshots keep their old layout for time
         travel."""
-        import shutil
-
-        for _ in range(max_retries):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise FileNotFoundError(f"table {self.name} has no snapshots")
+        def plan() -> _Rewrite:
+            snap = self._require_snapshot()
             unit = partition_unit if partition_unit is not None \
                 else snap.get("partition_unit", "")
-            df = self.read(spark)
-            if target_files and not cluster_by and not zorder_by \
-                    and not unit:
-                df = df.coalesce(target_files)
-            ddir, n = self._write_data(
-                df, unit, snap.get("ts_col", "timestamp"),
-                cluster_by=cluster_by, target_files=target_files,
-                zorder_by=zorder_by,
-            )
-            new = {
-                "parent": snap["snapshot_id"],
-                "op": "compact",
-                "data_dirs": [ddir],
-                "schema": snap["schema"],
-                "partition_unit": unit,
-                "ts_col": snap.get("ts_col", "timestamp"),
-                "row_count": n,
-                "added_rows": 0,
-                "committed_at": time.time(),
-                "snapshot_id": None,
-                # the rewrite read through read() → pending merge-on-read
-                # masks are FOLDED into the new data; none carry forward
-                "deletes": [],
-            }
-            # compaction rewrites LAYOUT, not content: user metadata
-            # riding the snapshot (consumer checkpoints, search-index
-            # corpus scalars, …) carries forward — the Iceberg
-            # table-properties-survive-rewrite contract. Internal
-            # bookkeeping keys (underscore-prefixed: _base_dirs,
-            # _writer) are commit-scoped and never carried.
-            for key, val in snap.items():
-                if not key.startswith("_"):
-                    new.setdefault(key, val)
+            coalesce = target_files and not cluster_by and not zorder_by \
+                and not unit
+            return _Rewrite({**snap, "partition_unit": unit},
+                            list(snap["data_dirs"]), [],
+                            lambda live: live.coalesce(target_files) if coalesce else live)
+
+        def write(df: DataFrame, unit: str, ts_col: str) -> tuple[str, int]:
+            ddir, n = self._write_data(df, unit, ts_col, cluster_by=cluster_by,
+                                       target_files=target_files,
+                                       zorder_by=zorder_by)
             if bloom_cols:
                 # keep equality blooms fresh through the rewrite —
                 # one scan of the just-written dir (OS-page warm),
@@ -989,14 +978,9 @@ class IcepackTable:
                 from swarm_spark import blooms as _blooms
 
                 _blooms.collect_dir_blooms(spark, ddir, bloom_cols)
-            try:
-                self._commit(new)
-                return new
-            except CommitConflict:
-                shutil.rmtree(ddir, ignore_errors=True)  # stale rewrite
-        raise CommitConflict(
-            f"compact on table {self.name} kept losing to concurrent commits"
-        )
+            return ddir, n
+
+        return self._rewrite(spark, "compact", plan, write)
 
     def _narrow_deletes(self, pending: list[dict],
                         kept_dirs: list[str]) -> list[dict]:
@@ -1034,20 +1018,16 @@ class IcepackTable:
         return out
 
     def _mor_delete_commit(self, predicates: list[tuple] | None,
-                           key_file: str | None, key_cols: list[str] | None,
-                           max_retries: int = 10) -> dict:
+                           key_file: str | None, key_cols: list[str] | None) -> dict:
         """Shared merge-on-read commit for delete_where(mode='mor') and
         delete_keys: record a delete entry scoped to the CURRENT dirs
         it can affect — no data touched, O(metadata) per call."""
-        for _ in range(max_retries):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise FileNotFoundError(f"table {self.name} has no snapshots")
+        def attempt() -> dict:
+            snap = self._require_snapshot()
             if predicates is not None:
-                affected, untouched = filestats.affected_dirs(
-                    snap["data_dirs"], predicates)
+                affected, _ = filestats.affected_dirs(snap["data_dirs"], predicates)
             else:  # arbitrary key sets: stats cannot exclude dirs
-                affected, untouched = list(snap["data_dirs"]), []
+                affected = list(snap["data_dirs"])
             if not affected:
                 return {**snap, "dirs_affected": 0, "mode": "mor",
                         "rows_deleted": 0}
@@ -1060,35 +1040,17 @@ class IcepackTable:
             else:
                 entry["key_file"] = key_file
                 entry["key_cols"] = list(key_cols)
-            new = {
-                "parent": snap["snapshot_id"],
-                "op": "mor_delete",
-                "data_dirs": list(snap["data_dirs"]),
-                "schema": snap["schema"],
-                "partition_unit": snap.get("partition_unit", ""),
-                "ts_col": snap.get("ts_col", "timestamp"),
-                "row_count": snap.get("row_count", 0),  # physical rows
-                "added_rows": 0,
-                "committed_at": time.time(),
-                "snapshot_id": None,
-                "deletes": (snap.get("deletes") or []) + [entry],
-            }
-            for key, val in snap.items():
-                if not key.startswith("_"):
-                    new.setdefault(key, val)
-            try:
-                self._commit(new)
-                new["dirs_affected"] = len(affected)
-                new["mode"] = "mor"
-                return new
-            except CommitConflict:
-                continue  # rewrite landed mid-commit — rescope and retry
-        raise CommitConflict(
-            f"mor delete on table {self.name} kept losing to concurrent rewrites"
-        )
+            new = self._successor(snap, "mor_delete", list(snap["data_dirs"]),
+                                  snap.get("row_count", 0),  # physical rows
+                                  (snap.get("deletes") or []) + [entry])
+            # a rewrite landing mid-commit conflicts: rescope and retry
+            return {**self._commit_new(new), "dirs_affected": len(affected),
+                    "mode": "mor"}
+
+        return self._retry("mor_delete", attempt)
 
     def delete_keys(self, spark: SparkSession, keys_df: DataFrame,
-                    key_cols: list[str], max_retries: int = 10) -> dict:
+                    key_cols: list[str]) -> dict:
         """Equality-delete FILE (Iceberg v2's merge-on-read equality
         deletes): write the key tuples once as a small parquet object,
         record it in the snapshot, and read() anti-joins it
@@ -1110,16 +1072,13 @@ class IcepackTable:
         keys_df.select(*key_cols).distinct().coalesce(1).write.parquet(kdir)
         try:
             return self._mor_delete_commit(
-                predicates=None, key_file=kdir, key_cols=key_cols,
-                max_retries=max_retries)
+                predicates=None, key_file=kdir, key_cols=key_cols)
         except Exception:
-            import shutil
-
             shutil.rmtree(kdir, ignore_errors=True)
             raise
 
     def delete_where(self, spark: SparkSession, predicates: list[tuple],
-                     max_retries: int = 10, mode: str = "cow") -> dict:
+                     mode: str = "cow") -> dict:
         """DELETE rows matching the conjunctive `predicates` (same
         forms as read(prune=...)). Keep semantics are SQL DELETE's:
         rows where the predicate is NULL are KEPT.
@@ -1150,89 +1109,28 @@ class IcepackTable:
         Returns the snapshot; extra keys `dirs_rewritten` /
         `dirs_untouched` / `rows_deleted` (cow) or `dirs_affected` /
         `mode` (mor) report the work done."""
-        import shutil
-
         if mode not in ("cow", "mor"):
             raise ValueError(f"delete_where: mode must be cow|mor, got {mode!r}")
         if mode == "mor":
             return self._mor_delete_commit(
-                predicates=predicates, key_file=None, key_cols=None,
-                max_retries=max_retries)
-        for _ in range(max_retries):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise FileNotFoundError(f"table {self.name} has no snapshots")
-            schema = T.StructType.fromJson(json.loads(snap["schema"]))
+                predicates=predicates, key_file=None, key_cols=None)
+        drop = F.coalesce(filestats.predicate_column(predicates), F.lit(False))
+
+        def plan() -> _Rewrite | dict:
+            snap = self._require_snapshot()
             affected, untouched = filestats.affected_dirs(
                 snap["data_dirs"], predicates)
-            pending = snap.get("deletes") or []
             if not affected:  # provably nothing to delete
                 return {**snap, "dirs_rewritten": 0,
                         "dirs_untouched": len(untouched), "rows_deleted": 0}
-            df = self._scan_dirs(spark, affected, keep_s=bool(pending))
-            if pending:
-                # fold pending merge-on-read masks into the rewrite —
-                # masked rows must not be resurrected as "survivors"
-                df = self._apply_delete_masks(spark, df, pending)
-                if "_s" in df.columns:
-                    df = df.drop("_s")
-            if "_p" in df.columns:
-                df = df.drop("_p")
-            cols = [
-                F.col(f.name).cast(f.dataType) if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-            df = df.select(*cols)
-            # affected-dir row count from the stats sidecars when all
-            # are present (metadata, no job); Spark count otherwise
-            sidecars = [filestats.load_dir_stats(d) for d in affected]
-            if all(s and s.get("files") for s in sidecars):
-                before = sum(
-                    f["rows"] for s in sidecars for f in s["files"].values()
-                )
-            else:
-                before = df.count()
-            keep = df.filter(
-                ~F.coalesce(filestats.predicate_column(predicates), F.lit(False))
-            )
-            ddir, n_kept = self._write_data(
-                keep, snap.get("partition_unit", ""),
-                snap.get("ts_col", "timestamp"))
-            new = {
-                "parent": snap["snapshot_id"],
-                "op": "delete",
-                "data_dirs": untouched + ([ddir] if n_kept else []),
-                "schema": snap["schema"],
-                "partition_unit": snap.get("partition_unit", ""),
-                "ts_col": snap.get("ts_col", "timestamp"),
-                "row_count": snap.get("row_count", 0) - (before - n_kept),
-                "added_rows": 0,
-                "committed_at": time.time(),
-                "snapshot_id": None,
-                # mor entries covering only rewritten dirs were folded;
-                # entries still covering untouched dirs carry NARROWED
-                "deletes": self._narrow_deletes(pending, untouched),
-            }
-            for key, val in snap.items():  # user metadata carries forward
-                if not key.startswith("_"):
-                    new.setdefault(key, val)
-            try:
-                self._commit(new)
-                if not n_kept:
-                    shutil.rmtree(ddir, ignore_errors=True)  # empty rewrite
-                new["dirs_rewritten"] = len(affected)
-                new["dirs_untouched"] = len(untouched)
-                new["rows_deleted"] = before - n_kept
-                return new
-            except CommitConflict:
-                shutil.rmtree(ddir, ignore_errors=True)  # stale rewrite
-        raise CommitConflict(
-            f"delete_where on table {self.name} kept losing to concurrent commits"
-        )
+            return _Rewrite(snap, affected, untouched,
+                            lambda live: live.filter(~drop),
+                            lambda live_n, n: {"rows_deleted": live_n - n})
+
+        return self._rewrite(spark, "delete", plan)
 
     def update_where(self, spark: SparkSession, predicates: list[tuple],
-                     assignments: dict, max_retries: int = 10) -> dict:
+                     assignments: dict) -> dict:
         """Copy-on-write UPDATE with the same dir-level stats pruning
         as delete_where: rows matching the conjunctive `predicates`
         get `assignments` applied ({col: Column-expr-or-literal};
@@ -1243,95 +1141,38 @@ class IcepackTable:
         drifts. Commits op='update' (concurrent append ⇒ recompute
         from new CURRENT). Returns the snapshot + `dirs_rewritten` /
         `dirs_untouched` / `rows_updated`."""
-        import shutil
+        pred = F.coalesce(filestats.predicate_column(predicates), F.lit(False))
+        sets = {c: v if isinstance(v, Column) else F.lit(v)
+                for c, v in assignments.items()}
 
-        for _ in range(max_retries):
-            snap = self.current_snapshot()
-            if snap is None:
-                raise FileNotFoundError(f"table {self.name} has no snapshots")
+        def plan() -> _Rewrite | dict:
+            snap = self._require_snapshot()
             schema = T.StructType.fromJson(json.loads(snap["schema"]))
-            known = {f.name for f in schema.fields}
-            unknown = set(assignments) - known
+            unknown = set(sets) - set(schema.names)
             if unknown:
                 raise ValueError(
                     f"update_where: unknown column(s) {sorted(unknown)}; "
-                    f"table {self.name} has {sorted(known)}")
+                    f"table {self.name} has {sorted(schema.names)}")
             affected, untouched = filestats.affected_dirs(
                 snap["data_dirs"], predicates)
             if not affected:  # provably nothing to update
                 return {**snap, "dirs_rewritten": 0,
                         "dirs_untouched": len(untouched), "rows_updated": 0}
-            pending = snap.get("deletes") or []
-            df = self._scan_dirs(spark, affected, keep_s=bool(pending))
-            if pending:
-                # fold pending merge-on-read masks — masked rows must
-                # not be resurrected (or updated) by the rewrite
-                df = self._apply_delete_masks(spark, df, pending)
-                if "_s" in df.columns:
-                    df = df.drop("_s")
-            if "_p" in df.columns:
-                df = df.drop("_p")
-            df = df.select(*[
-                F.col(f.name).cast(f.dataType) if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ])
-            pred = F.coalesce(
-                filestats.predicate_column(predicates), F.lit(False))
-            # matched-row count rides the write job (no extra pass)
-            obs = Observation()
-            df = df.observe(obs, F.sum(pred.cast("bigint")).alias("matched"))
-            cols = []
-            for f in schema.fields:
-                if f.name in assignments:
-                    v = assignments[f.name]
-                    if not isinstance(v, Column):
-                        v = F.lit(v)
-                    cols.append(F.when(pred, v.cast(f.dataType))
-                                .otherwise(F.col(f.name)).alias(f.name))
-                else:
-                    cols.append(F.col(f.name))
-            ddir, n_new = self._write_data(
-                df.select(*cols), snap.get("partition_unit", ""),
-                snap.get("ts_col", "timestamp"))
-            row_count = snap.get("row_count", 0)
-            if pending:
-                # folded masks physically removed rows from the
-                # rewritten dirs — adjust the physical row count
-                sidecars = [filestats.load_dir_stats(d) for d in affected]
-                if all(s and s.get("files") for s in sidecars):
-                    before_aff = sum(
-                        f["rows"] for s in sidecars for f in s["files"].values())
-                else:
-                    before_aff = self._scan_dirs(spark, affected).count()
-                row_count -= before_aff - n_new
-            new = {
-                "parent": snap["snapshot_id"],
-                "op": "update",
-                "data_dirs": untouched + ([ddir] if n_new else []),
-                "schema": snap["schema"],
-                "partition_unit": snap.get("partition_unit", ""),
-                "ts_col": snap.get("ts_col", "timestamp"),
-                "row_count": row_count,
-                "added_rows": 0,
-                "committed_at": time.time(),
-                "snapshot_id": None,
-                "deletes": self._narrow_deletes(pending, untouched),
-            }
-            for key, val in snap.items():  # user metadata carries forward
-                if not key.startswith("_"):
-                    new.setdefault(key, val)
-            try:
-                self._commit(new)
-                new["dirs_rewritten"] = len(affected)
-                new["dirs_untouched"] = len(untouched)
-                new["rows_updated"] = int(obs.get["matched"] or 0)
-                return new
-            except CommitConflict:
-                shutil.rmtree(ddir, ignore_errors=True)  # stale rewrite
-        raise CommitConflict(
-            f"update_where on table {self.name} kept losing to concurrent commits"
-        )
+            matched = Observation()
+
+            def transform(live: DataFrame) -> DataFrame:
+                # matched-row count rides the write job (no extra pass)
+                live = live.observe(matched, F.sum(pred.cast("bigint")).alias("n"))
+                return live.select(*[
+                    F.when(pred, sets[f.name].cast(f.dataType))
+                    .otherwise(F.col(f.name)).alias(f.name)
+                    if f.name in sets else F.col(f.name)
+                    for f in schema.fields])
+
+            return _Rewrite(snap, affected, untouched, transform,
+                            lambda live_n, n: {"rows_updated": int(matched.get["n"] or 0)})
+
+        return self._rewrite(spark, "update", plan)
 
     def remove_orphan_files(self, older_than_sec: float = 3600.0) -> dict:
         """GC data dirs not referenced by ANY live snapshot (the
@@ -1341,8 +1182,6 @@ class IcepackTable:
         than `older_than_sec` are removed — an IN-FLIGHT writer's dir
         is never collected (default 1 h dwarfs any commit window).
         Never touches referenced dirs; returns counts."""
-        import shutil
-
         live: set[str] = set()
         for s in self.snapshots():
             live.update(os.path.basename(d) for d in s["data_dirs"])
@@ -1445,6 +1284,31 @@ class IcepackTable:
                 df = df.unionByName(p, allowMissingColumns=True)
         return df
 
+    def _live_rows(self, spark: SparkSession, dirs: list[str],
+                   deletes: list[dict], schema: T.StructType,
+                   part_filter: Column | None = None) -> DataFrame:
+        """Live rows of `dirs` under the merge-on-read masks `deletes`,
+        projected to `schema`. `part_filter` is a predicate on the
+        hidden `_p` partition column, applied before projection drops
+        it."""
+        df = self._scan_dirs(spark, dirs, keep_s=bool(deletes))
+        if part_filter is not None:
+            df = df.filter(part_filter)
+        if deletes:
+            df = self._apply_delete_masks(spark, df, deletes)
+        return self._project(df, schema)
+
+    @staticmethod
+    def _project(df: DataFrame, schema: T.StructType) -> DataFrame:
+        """`df` as the evolved table `schema`: columns by name, cast to
+        the recorded type; a column the files lack reads as null,
+        extra file columns (`_p`, `_s`, dropped fields) go."""
+        return df.select(*[
+            F.col(f.name).cast(f.dataType) if f.name in df.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ])
+
     @staticmethod
     def _dir_sval(d: str) -> str:
         """The `_s` partition VALUE for a data dir path (`_s=<uuid>` →
@@ -1461,18 +1325,25 @@ class IcepackTable:
         version of Iceberg v2 sequence-number scoping. SQL DELETE
         semantics: NULL predicate / NULL key = row kept."""
         for ent in deletes:
-            applies = F.col("_s").isin(list(ent["applies_to"]))
-            if ent.get("key_file"):
-                keys = (spark.read.parquet(ent["key_file"])
-                        .select(*ent["key_cols"]).distinct()
-                        .withColumn("_kdel", F.lit(1)))
-                df = df.join(F.broadcast(keys), list(ent["key_cols"]), "left")
-                df = df.filter(~(applies & F.col("_kdel").isNotNull())) \
-                       .drop("_kdel")
-            else:
-                pred = filestats.predicate_column(ent["predicates"])
-                df = df.filter(~(applies & F.coalesce(pred, F.lit(False))))
+            df, masked = self._masked_by(spark, df, ent)
+            df = df.filter(~masked).drop("_kdel")
         return df
+
+    @staticmethod
+    def _masked_by(spark: SparkSession, df: DataFrame,
+                   ent: dict) -> tuple[DataFrame, Column]:
+        """`df` (carrying `_s`) prepared for one merge-on-read entry,
+        and the column that is true for the rows the entry masks. A
+        key-file entry left-joins its keys as `_kdel`."""
+        applies = F.col("_s").isin(list(ent["applies_to"]))
+        if ent.get("key_file"):
+            keys = (spark.read.parquet(ent["key_file"])
+                    .select(*ent["key_cols"]).distinct()
+                    .withColumn("_kdel", F.lit(1)))
+            return (df.join(F.broadcast(keys), list(ent["key_cols"]), "left"),
+                    applies & F.col("_kdel").isNotNull())
+        pred = filestats.predicate_column(ent["predicates"])
+        return df, applies & F.coalesce(pred, F.lit(False))
 
     def snapshot(self, snapshot_id: int) -> dict:
         """Load one snapshot's metadata by id (FileNotFoundError if it
@@ -1571,12 +1442,7 @@ class IcepackTable:
             prev_dirs, prev_dels = [], []
 
         def project(df, change, sid):
-            cols = [
-                F.col(f.name).cast(f.dataType) if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-            return df.select(*cols) \
+            return self._project(df, schema) \
                 .withColumn("_change_type", F.lit(change)) \
                 .withColumn("_commit_snapshot_id",
                             F.lit(sid).cast("long"))
@@ -1588,11 +1454,8 @@ class IcepackTable:
                 new_dirs = [d for d in snap["data_dirs"]
                             if d not in prev_dirs]
                 if new_dirs:
-                    df = self._scan_dirs(spark, new_dirs)
-                    for c in ("_p", "_s"):
-                        if c in df.columns:
-                            df = df.drop(c)
-                    parts.append(project(df, "insert", sid))
+                    parts.append(project(self._scan_dirs(spark, new_dirs),
+                                         "insert", sid))
             else:  # mor_delete: emit the newly-masked rows as deletes
                 prior_ids = {e["id"] for e in prev_dels}
                 own = [e for e in snap.get("deletes") or []
@@ -1607,23 +1470,8 @@ class IcepackTable:
                         # rows already masked before this commit never
                         # re-delete
                         df = self._apply_delete_masks(spark, df, prev_dels)
-                    applies = F.col("_s").isin(list(ent["applies_to"]))
-                    if ent.get("key_file"):
-                        keys = (spark.read.parquet(ent["key_file"])
-                                .select(*ent["key_cols"]).distinct()
-                                .withColumn("_kdel", F.lit(1)))
-                        df = df.join(F.broadcast(keys),
-                                     list(ent["key_cols"]), "left")
-                        df = df.filter(applies & F.col("_kdel").isNotNull()) \
-                               .drop("_kdel")
-                    else:
-                        pred = filestats.predicate_column(ent["predicates"])
-                        df = df.filter(
-                            applies & F.coalesce(pred, F.lit(False)))
-                    for c in ("_p", "_s"):
-                        if c in df.columns:
-                            df = df.drop(c)
-                    parts.append(project(df, "delete", sid))
+                    df, masked = self._masked_by(spark, df, ent)
+                    parts.append(project(df.filter(masked), "delete", sid))
             prev_dirs = list(snap["data_dirs"])
             prev_dels = list(snap.get("deletes") or [])
         if not parts:
@@ -1663,12 +1511,7 @@ class IcepackTable:
             old = spark.createDataFrame([], schema)
         else:
             old = self.read(spark, snapshot_id=from_snapshot_id)
-        cols = [
-            F.col(f.name).cast(f.dataType) if f.name in old.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-        old = old.select(*cols)
+        old = self._project(old, schema)
         ins = new.exceptAll(old).withColumn("_change_type", F.lit("insert"))
         dels = old.exceptAll(new).withColumn("_change_type", F.lit("delete"))
         return ins.unionByName(dels)
@@ -1724,15 +1567,7 @@ class IcepackTable:
         schema = T.StructType.fromJson(json.loads(to_snap["schema"]))
         if not new_dirs:
             return spark.createDataFrame([], schema)
-        df = self._scan_dirs(spark, new_dirs)
-        if "_p" in df.columns:
-            df = df.drop("_p")
-        cols = [
-            F.col(f.name).cast(f.dataType) if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-        return df.select(*cols)
+        return self._live_rows(spark, new_dirs, [], schema)
 
     def build_blooms(self, spark: SparkSession, cols: list[str],
                      m_bytes: int = 32 * 1024, k: int = 6,
@@ -1753,9 +1588,7 @@ class IcepackTable:
 
         from swarm_spark import blooms as _blooms
 
-        snap = self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"table {self.name} has no snapshots")
+        snap = self._require_snapshot()
         todo = []
         skipped = 0
         for d in snap["data_dirs"]:
@@ -1798,9 +1631,7 @@ class IcepackTable:
         per-file metadata counting unsound (masked rows are invisible
         to footers), so the whole count falls back to the masked read
         — correct first, fast when the table allows it."""
-        snap = self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"table {self.name} has no snapshots")
+        snap = self._require_snapshot()
         if snap.get("deletes"):
             n = self.read(spark, prune=predicates).count()
             return {"count": n, "meta_rows": 0, "residual_files": -1,
@@ -1902,30 +1733,14 @@ class IcepackTable:
             if not scan:  # every file provably excluded
                 df = spark.createDataFrame([], schema)
                 return filestats.residual_filter(df, prune)
-        pending = snap.get("deletes") or []
-        df = self._scan_dirs(spark, scan, keep_s=bool(pending))
-        unit = snap.get("partition_unit")
+        unit, part = snap.get("partition_unit"), None
         if unit and ts_between:
-            fmt_py = {"hour": "%Y-%m-%d-%H", "day": "%Y-%m-%d",
-                      "month": "%Y-%m", "year": "%Y"}[unit]
             import datetime as _dt
 
-            lo = _dt.datetime.fromisoformat(ts_between[0]).strftime(fmt_py)
-            hi = _dt.datetime.fromisoformat(ts_between[1]).strftime(fmt_py)
-            df = df.filter((F.col("_p") >= lo) & (F.col("_p") <= hi))
-        if pending:
-            df = self._apply_delete_masks(spark, df, pending)
-            if "_s" in df.columns:
-                df = df.drop("_s")
-        if "_p" in df.columns:
-            df = df.drop("_p")
-        # project to the evolved table schema (missing columns → null)
-        cols = [
-            F.col(f.name).cast(f.dataType) if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-        out = df.select(*cols)
+            lo, hi = (_dt.datetime.fromisoformat(t).strftime(_PY_PART_FMT[unit])
+                      for t in ts_between)
+            part = (F.col("_p") >= lo) & (F.col("_p") <= hi)
+        out = self._live_rows(spark, scan, snap.get("deletes") or [], schema, part)
         # residual filter: skipping is a scan optimization, the
         # predicate still applies row-by-row (files that survive on
         # bounds may hold non-matching rows)

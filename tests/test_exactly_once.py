@@ -139,6 +139,24 @@ class TestPartialFailureRollback:
         assert [r.batch_id for r in audit] == ["pf3"]
         assert {i.sink: i.log_count for i in audit[0].ingests} == res.per_sink_rows
 
+    def test_failed_runs_release_persisted_routed(
+        self, spark, tmp_path, transcripts, monkeypatch
+    ):
+        """A run whose audit write fails unpersists `routed` on its way
+        out: three failed runs leave the executor cache as it was."""
+        p = make_pipeline(spark, tmp_path)
+
+        def boom(self, rows, schema, **kw):
+            raise RuntimeError("audit exploded")
+
+        monkeypatch.setattr(IcepackTable, "append_rows", boom)
+        transcripts.count()  # the module's cached input is not the leak
+        cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+        for i in range(3):
+            with pytest.raises(RuntimeError, match="audit exploded"):
+                p.run(transcripts, batch_id=f"leak{i}")
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+
     def test_count_mismatch_raises_not_assert(self):
         """The X6 written-vs-routed verify must survive python -O:
         a RuntimeError, never a bare assert."""

@@ -397,28 +397,6 @@ class TestDeleteWhere:
         got = t.read(spark)
         assert got.count() == 0 and got.columns == ["k"]
 
-    def test_delete_aborts_on_concurrent_append(self, spark, tmp_path):
-        """An append sneaking in mid-rewrite must abort the commit and
-        the retry must see (and not delete) the new row."""
-        t = _mk_table(spark, tmp_path)
-        t.append(spark.createDataFrame([(1,), (2,)], "k int"))
-        real_write = t._write_data
-        state = {"injected": False}
-
-        def write_then_append(df, unit, ts_col, **kw):
-            out = real_write(df, unit, ts_col, **kw)
-            if not state["injected"]:
-                state["injected"] = True
-                t.append(spark.createDataFrame([(99,)], "k int"))
-            return out
-
-        t._write_data = write_then_append
-        snap = t.delete_where(spark, [("k", "=", 1)])
-        t._write_data = real_write
-        assert state["injected"]
-        assert snap["rows_deleted"] == 1
-        assert sorted(r["k"] for r in t.read(spark).collect()) == [2, 99]
-
     def test_delete_on_partitioned_table(self, spark, tmp_path):
         t = _mk_table(spark, tmp_path)
         df = spark.range(0, 200).select(

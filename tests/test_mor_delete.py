@@ -83,6 +83,23 @@ class TestMorPredicateDelete:
         got = sorted(r["k"] for r in t.read(spark).collect())
         assert got == list(range(0, 100)) + list(range(250, 400))
 
+    @pytest.mark.parametrize("sidecar", [True, False],
+                             ids=["sidecar", "no_sidecar"])
+    def test_cow_delete_after_mor_delete_counts(self, spark, tmp_path, sidecar):
+        """rows_deleted counts live rows only (not the rows an earlier
+        mor delete had masked), and the snapshot row_count stays
+        physical when the rewritten dir has no stats sidecar."""
+        t = IcepackCatalog(str(tmp_path)).table("c")
+        t.append(spark.range(10).select(F.col("id").alias("k")))
+        t.delete_where(spark, [("k", "<", 5)], mode="mor")
+        if not sidecar:
+            for d in t.current_snapshot()["data_dirs"]:
+                os.remove(os.path.join(d, "_stats.json"))
+        snap = t.delete_where(spark, [("k", "<", 8)])
+        assert snap["rows_deleted"] == 3
+        assert snap["row_count"] == 2
+        assert t.count_where(spark) == t.read(spark).count() == 2
+
     def test_update_where_does_not_resurrect(self, spark, tmp_path):
         t = _mk(spark, tmp_path)
         t.delete_where(spark, [("k", ">=", 150), ("k", "<", 250)], mode="mor")

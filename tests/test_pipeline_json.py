@@ -318,6 +318,24 @@ class TestJsonPartialFailure:
         assert not res["skipped"]
         assert ing.catalog.table("logs").read(spark).count() == 1
 
+    def test_failed_pushes_release_persisted_records(self, spark, tmp_path, monkeypatch):
+        """A push whose audit write fails unpersists `recs` on its way
+        out: three failed pushes leave the executor cache as it was."""
+        from swarm_spark.tablestore import IcepackTable
+
+        _write(tmp_path / "a.log", LOG_LINES)
+        ing = JsonIngest(spark, str(tmp_path / "wh"), EVENTS, RULES)
+
+        def boom(self, rows, schema, **kw):
+            raise RuntimeError("audit exploded")
+
+        monkeypatch.setattr(IcepackTable, "append_rows", boom)
+        cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+        for i in range(3):
+            with pytest.raises(RuntimeError, match="audit exploded"):
+                ing.run(str(tmp_path / "a.log"), batch_id=f"leak{i}")
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+
     def test_sink_append_count_mismatch_rolls_back(self, spark, tmp_path, monkeypatch):
         """A sink write that loses a row must fail the batch with a
         RuntimeError (not an assert, so python -O keeps it) and roll

@@ -204,57 +204,6 @@ def test_drop_fields_never_nulls_envelope(spark, tmp_path):
 
 
 # -------------------------------------------- GC / rewrite races ----
-def test_compact_aborts_instead_of_dropping_concurrent_append(spark, tmp_path):
-    """An append landing between compact's table read and its commit
-    must NOT vanish: the rewrite aborts (CommitConflict) and re-runs
-    from the new CURRENT."""
-    from swarm_spark.tablestore import IcepackTable
-
-    t = IcepackTable(str(tmp_path), "tbl")
-    t.append(spark.createDataFrame([(i,) for i in range(5)], "a bigint"))
-
-    other = IcepackTable(str(tmp_path), "tbl")
-    real_write = t._write_data
-    state = {"injected": False}
-
-    def write_then_append(df, unit, ts_col, **kw):
-        out = real_write(df, unit, ts_col, **kw)
-        if not state["injected"]:
-            state["injected"] = True  # sneak an append in mid-rewrite
-            other.append(spark.createDataFrame([(99,)], "a bigint"))
-        return out
-
-    t._write_data = write_then_append
-    snap = t.compact(spark)
-    assert snap["op"] == "compact"
-    got = sorted(r["a"] for r in t.read(spark).collect())
-    assert got == [0, 1, 2, 3, 4, 99]  # the concurrent row survived
-    assert state["injected"]
-
-
-def test_merge_upsert_retries_on_concurrent_append(spark, tmp_path):
-    from swarm_spark.tablestore import IcepackTable
-
-    t = IcepackTable(str(tmp_path), "tbl")
-    t.append(spark.createDataFrame([(1, "old"), (2, "old")], "k bigint, v string"))
-
-    other = IcepackTable(str(tmp_path), "tbl")
-    real_write = t._write_data
-    state = {"injected": False}
-
-    def write_then_append(df, unit, ts_col, **kw):
-        out = real_write(df, unit, ts_col, **kw)
-        if not state["injected"]:
-            state["injected"] = True
-            other.append(spark.createDataFrame([(3, "live")], "k bigint, v string"))
-        return out
-
-    t._write_data = write_then_append
-    t.merge_upsert(spark, spark.createDataFrame([(2, "new")], "k bigint, v string"), ["k"])
-    got = {(r.k, r.v) for r in t.read(spark).collect()}
-    assert got == {(1, "old"), (2, "new"), (3, "live")}
-
-
 def test_gc_race_no_dangling_dirs(spark, tmp_path):
     """Appenders racing a compact+expire maintenance loop: at the end,
     no kept snapshot references a deleted data dir, and not one

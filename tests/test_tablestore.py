@@ -327,3 +327,88 @@ class TestPartitionRespec:
         assert sorted(r["k"] for r in got.collect()) == [4, 5, 6, 7, 99]
         # time travel to the pre-respec snapshot still reads fully
         assert t.read(spark, snapshot_id=pre).count() == 8
+
+
+class TestCopyOnWriteLoop:
+    """The rewrite-and-commit loop shared by delete_where, update_where,
+    merge_upsert and compact."""
+
+    OPS = {
+        "delete_where": (lambda t, s: t.delete_where(s, [("k", "=", 1)]),
+                         "delete", {"rows_deleted": 1},
+                         {(2, "old"), (99, "live")}),
+        "update_where": (lambda t, s: t.update_where(s, [("k", "=", 1)], {"v": "new"}),
+                         "update", {"rows_updated": 1},
+                         {(1, "new"), (2, "old"), (99, "live")}),
+        "merge_upsert": (lambda t, s: t.merge_upsert(
+                             s, s.createDataFrame([(2, "new")], "k bigint, v string"), ["k"]),
+                         "merge", {"rows_matched": 1, "rows_inserted": 0},
+                         {(1, "old"), (2, "new"), (99, "live")}),
+        "compact": (lambda t, s: t.compact(s), "compact", {},
+                    {(1, "old"), (2, "old"), (99, "live")}),
+    }
+
+    @pytest.mark.parametrize("op", list(OPS))
+    def test_retries_once_past_concurrent_append(self, spark, tmp_path, op):
+        """An append landing between the rewrite's write and its commit
+        aborts the commit: the stale dir goes, the op re-runs once from
+        the new CURRENT, and the appended row survives."""
+        run, snap_op, counters, rows = self.OPS[op]
+        t = IcepackCatalog(str(tmp_path)).table("t")
+        t.append(spark.createDataFrame([(1, "old"), (2, "old")], "k bigint, v string"))
+        other = IcepackCatalog(str(tmp_path)).table("t")
+        real_write = t._write_data
+        writes = []
+
+        def write_then_append(df, unit, ts_col, **kw):
+            out = real_write(df, unit, ts_col, **kw)
+            if not writes:  # sneak an append in mid-rewrite
+                other.append(spark.createDataFrame([(99, "live")], "k bigint, v string"))
+            writes.append(out)
+            return out
+
+        t._write_data = write_then_append
+        snap = run(t, spark)
+        assert len(writes) == 2  # exactly one retry
+        assert snap["op"] == snap_op
+        assert {k: snap[k] for k in counters} == counters
+        assert {(r.k, r.v) for r in t.read(spark).collect()} == rows
+        assert t.remove_orphan_files(older_than_sec=0)["orphans_removed"] == 0
+
+    # Spark jobs per op on a 4x100-row day-partitioned table at local[4]
+    # (AQE reports shuffle stages as separate jobs, so these are upper
+    # bounds); a pending mor mask must not add a job.
+    JOBS = {"delete_where": 3, "update_where": 3, "merge_upsert_2keys": 9,
+            "merge_upsert_1key": 11, "compact": 3}
+
+    @pytest.mark.parametrize("masked", [False, True], ids=["plain", "masked"])
+    @pytest.mark.parametrize("op", list(JOBS))
+    def test_job_count_pin(self, spark, tmp_path, op, masked):
+        from pyspark.sql import functions as F
+
+        t = IcepackCatalog(str(tmp_path)).table("t")
+        for b in range(4):
+            t.append(spark.range(b * 100, b * 100 + 100).select(
+                F.col("id").alias("k"), (F.col("id") % 7).alias("g"),
+                (F.lit(f"2024-01-0{b + 1} 00:00:00").cast("timestamp")
+                 + F.make_interval(secs=F.col("id") % 60)).alias("ts")),
+                partition_unit="day", ts_col="ts")
+        if masked:
+            t.delete_where(spark, [("k", "<", 5)], mode="mor")
+        incoming = spark.createDataFrame([(10, 1), (250, 2)], "k bigint, g bigint")
+        run = {
+            "delete_where": lambda: t.delete_where(spark, [("k", "<", 50)]),
+            "update_where": lambda: t.update_where(spark, [("k", "<", 50)], {"g": 99}),
+            "merge_upsert_2keys": lambda: t.merge_upsert(spark, incoming, ["k", "g"]),
+            "merge_upsert_1key": lambda: t.merge_upsert(spark, incoming, ["k"]),
+            "compact": lambda: t.compact(spark),
+        }[op]
+        sc = spark.sparkContext
+        group = f"pin-{op}-{masked}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setJobGroup(None, None)
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n <= self.JOBS[op], f"{op} ran {n} Spark jobs"
